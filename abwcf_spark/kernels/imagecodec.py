@@ -186,7 +186,7 @@ def decode_lossy(data: bytes) -> np.ndarray:
         raise ValueError("not an ABWL payload")
     w, h, step = struct.unpack(">IIB", data[8:17])
     q = np.frombuffer(zlib.decompress(data[17:]), dtype=np.uint8).reshape(h, w, 3)
-    if step > 0 and (255 // step) * step <= 255:
+    if step > 0:
         # quantized values are bounded by the encoder at 255//step, so
         # q*step never exceeds 255: the int32 upcast + clip is the identity
         # and a single uint8 multiply is bit-identical.  A corrupt payload
@@ -300,6 +300,9 @@ def _gray_exact(stack: np.ndarray) -> np.ndarray:
 
 
 _PHASH_IDX_CACHE: dict = {}
+# numpy's ufunc buffer: a reduction over more elements sums buffer-sized
+# chunks in sequence, an order _sum_last_exact does not reproduce
+_NP_BUFSIZE = 8192
 
 
 def _phash_block_index(h: int, w: int):
@@ -307,15 +310,18 @@ def _phash_block_index(h: int, w: int):
     by block size so every same-size block shares one exact pairwise
     reduction.  Returns [(n_elems, block_positions, idx_matrix)] with
     block_positions the row-major block numbers (i*8+j) and idx_matrix of
-    shape (n_blocks, n_elems) — or None when a degenerate block needs the
-    scalar max-guard path (h < 8 or w < 8)."""
+    shape (n_blocks, n_elems) — or None when the scalar path must run: a
+    degenerate block needs its max-guard (h < 8 or w < 8), or a block of
+    more than _NP_BUFSIZE elements is reduced in an order the batch sum
+    does not reproduce."""
     key = (h, w)
     got = _PHASH_IDX_CACHE.get(key)
     if got is not None or key in _PHASH_IDX_CACHE:
         return got
     ys = (np.arange(9) * h) // 8
     xs = (np.arange(9) * w) // 8
-    if (np.diff(ys) <= 0).any() or (np.diff(xs) <= 0).any():
+    dy, dx = np.diff(ys), np.diff(xs)
+    if (dy <= 0).any() or (dx <= 0).any() or dy.max() * dx.max() > _NP_BUFSIZE:
         _PHASH_IDX_CACHE[key] = None
         return None
     by_size: dict = {}
@@ -345,7 +351,7 @@ def phash64_batch(stack: np.ndarray) -> np.ndarray:
     if n_img == 0:
         return np.empty(0, dtype=np.int64)
     groups = _phash_block_index(h, w)
-    if groups is None:  # degenerate blocks: scalar max-guard semantics
+    if groups is None:  # degenerate or oversized blocks: scalar path
         return np.asarray([phash64(im) for im in stack], dtype=np.int64)
     gray = _gray_exact(stack).reshape(n_img, h * w)
     blocks = np.empty((n_img, 64), dtype=np.float64)

@@ -520,10 +520,14 @@ def body_length_col(df: DataFrame) -> Column:
     default payload consumer both derive from THIS one expression, so link
     expansion and payload accounting can never diverge on size; an actually
     truncated transfer is still caught by the consumer's decode/pixel
-    checks, which run on the real bytes."""
+    checks, which run on the real bytes.  A graph-only corpus (neither
+    column) has no known sizes: a NULL length, which every gate reads as
+    "not too big"."""
     if "content_length" in df.columns:
         return F.col("content_length")
-    return F.when(F.col("bytes").isNotNull(), F.length(F.col("bytes")))
+    if "bytes" in df.columns:
+        return F.when(F.col("bytes").isNotNull(), F.length(F.col("bytes")))
+    return F.lit(None).cast("long")
 
 
 def _nofollow_col(c: Column) -> Column:

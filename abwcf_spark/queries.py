@@ -538,113 +538,111 @@ def simhash_fingerprint(spark, sf_dir):
 QUERIES["simhash_fingerprint"] = simhash_fingerprint
 
 
-def _word_shingle_expr(docs: DataFrame):
-    """(projected docs, shingle-array Column) for word 3-grams — the shared
-    building block of the raw/distinct/array forms below."""
+# ---------------------------------------------------------------------------
+# Banded-LSH near-dup pairs — one skeleton for every modality (word and
+# char MinHash self-join, batch×corpus incremental MinHash, pHash):
+#   keyed rows (bucket keys…, member) → _bucket_pairs → caller's
+#   filter/projection → (MinHash only) _jaccard_confirm_arrays.
+# The shape is the one of distributed set-similarity joins (LCJoin, ICDE
+# 2019; Distributed Streaming Set Similarity Join, ICDE 2020): drop
+# candidate groups by a cheap count first, enumerate pairs only inside
+# the survivors, then run one exact confirm over the candidate docs.
+# ---------------------------------------------------------------------------
+def _bucket_pairs(keyed: DataFrame, cap: int) -> DataFrame:
+    """``keyed`` (bucket keys…, member) — one row per member per bucket,
+    the member last and orderable (an id, or a struct led by one) — →
+    every in-bucket member pair (a, b) with a before b in sort order, from
+    the buckets holding 2 ≤ size ≤ ``cap`` members.
+
+    The size is a window count over the bucket keys, filtered BELOW the
+    collect_list: a hot bucket (empty or boilerplate docs all hashing
+    together) is counted in the window's spillable buffer and dropped —
+    never collected into one array — and a surviving list holds ≤ ``cap``
+    members, so a bucket yields ≤ cap²/2 pairs.  The window's shuffle on
+    the keys also serves the aggregate: one exchange for count and
+    collect.  Pairs are enumerated in-row over the sorted member list; a
+    pair that shares several buckets comes back once per bucket, so
+    callers take distinct."""
+    *keys, member = keyed.columns
+    ms = (
+        keyed.withColumn("_ct", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .where((F.col("_ct") >= 2) & (F.col("_ct") <= cap))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(member)).alias("ms"))
+    )
+    pair_arr = F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.size("ms") - 2),
+            lambda i: F.transform(
+                F.sequence(i + 1, F.size("ms") - 1),
+                lambda j: F.struct(
+                    F.get("ms", i).alias("a"), F.get("ms", j).alias("b")
+                ),
+            ),
+        )
+    )
+    return ms.select(F.explode(pair_arr).alias("p")).select("p.a", "p.b")
+
+
+def _word_grams(docs: DataFrame):
+    """Word 3-grams of (doc_id, text) docs as (projected docs, gram-index
+    array Column, index → gram Column) — one definition feeding both the
+    exploded signature rows and the per-doc confirm arrays."""
     toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
-    d = docs.select("doc_id", toks.alias("toks"))
     n = F.size("toks")
     idx = F.when(n >= 3, F.sequence(F.lit(0), n - 3)).otherwise(
         F.array().cast("array<int>")
     )
-    sh = F.transform(
-        idx,
-        lambda i: F.concat_ws(
+
+    def gram(i):
+        return F.concat_ws(
             " ", F.get("toks", i), F.get("toks", i + 1), F.get("toks", i + 2)
-        ),
-    )
-    return d, sh
+        )
+
+    return docs.select("doc_id", toks.alias("toks")), idx, gram
 
 
-def _doc_shingles_raw(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle): word 3-grams WITH per-doc duplicates — for
-    consumers whose aggregate is duplicate-insensitive (MinHash min).
-    Skipping the distinct matters twice: no shuffle of shingle strings,
-    and no array_distinct under an explode (an O(n²) distinct inside the
-    exploded array expression measured 84 s vs 2 s at sf1.0).
-
-    The explode runs over the cheap INT index array; the shingle string is
-    assembled ABOVE the Generate from the materialized ``toks`` column —
-    building the full string array under the explode measured ~2× slower
-    (2.16 s vs 1.13 s at sf1.0)."""
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
-    d = docs.select("doc_id", toks.alias("toks"))
-    n = F.size("toks")
-    idx = F.when(n >= 3, F.sequence(F.lit(0), n - 3)).otherwise(
+def _char_grams(docs: DataFrame, n: int):
+    """Character n-grams, in the same (docs, index array, gram) form."""
+    ln = F.length("text")
+    idx = F.when(ln >= n, F.sequence(F.lit(1), ln - (n - 1))).otherwise(
         F.array().cast("array<int>")
     )
-    i = F.col("_i")
-    return d.select("doc_id", "toks", F.explode(idx).alias("_i")).select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.get("toks", i), F.get("toks", i + 1), F.get("toks", i + 2)
-        ).alias("shingle"),
+    return (
+        docs.select("doc_id", "text"), idx,
+        lambda i: F.col("text").substr(i, F.lit(n)),
     )
-
-
-def _doc_shingle_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles array<string>): per-doc DISTINCT word 3-grams as a
-    per-row array (array_distinct inside the row — never exploded; used by
-    the array_intersect Jaccard confirm)."""
-    d, sh = _word_shingle_expr(docs)
-    return d.select("doc_id", F.array_distinct(sh).alias("shingles"))
-
-
-def _doc_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle): distinct word 3-grams — per-row array transform,
-    NO window/shuffle (tokens never leave their row before the distinct)."""
-    return _doc_shingles_raw(docs).distinct()
 
 
 def _minhash_melted(
-    shingles: DataFrame, perms: int, bands: int, salt: str
+    docs: DataFrame, grams, perms: int, bands: int, salt: str
 ) -> DataFrame:
-    """(doc_id, shingle) set → banded MinHash signature, melted to one row
-    per (doc_id, band, bucket-hash): ``perms`` minhashes (xxhash64 with
-    per-permutation salt, min per doc) → ``bands`` × (perms/bands) row
-    groups, each hashed to a 64-bit bucket id.  Shared by the self-join
-    near-dup path (``_lsh_jaccard_pairs``) and the bipartite
-    batch-vs-corpus path (``_lsh_bipartite_pairs``)."""
-    rows_per_band = perms // bands
-    hashes = shingles.select(
-        "doc_id",
-        *[
-            F.xxhash64(F.concat(F.lit(f"{salt}{i}|"), F.col("shingle"))).alias(f"h{i}")
-            for i in range(perms)
-        ],
-    )
-    sig = hashes.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(perms)]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("b"),
-            F.xxhash64(
-                F.concat_ws(
-                    "|", F.lit(b),
-                    *[F.col(f"m{rows_per_band * b + r}") for r in range(rows_per_band)],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.b", "bb.bucket")
+    """(doc_id, text) docs → banded MinHash signature melted to one
+    (band, bucket, doc_id) row per doc per band: ``perms`` minhashes
+    (xxhash64 with a per-permutation salt, min per doc) → ``bands`` ×
+    (perms/bands) row groups, each hashed to a 64-bit bucket id.
 
-
-def _melted_from_raw(
-    raw: DataFrame, perms: int, bands: int, salt: str
-) -> DataFrame:
-    """Banded MinHash signature from RAW (doc_id, shingle) rows (per-doc
-    duplicates allowed — min is duplicate-insensitive, so the signature is
-    identical to the distinct-set form), melted to (doc_id, b, bucket).
-    The permutation hashes are flat codegen'd projections (a higher-order
-    transform() with xxhash64 inside falls back to interpreted per-element
-    evaluation — measured ~40× slower at sf1.0), and the only exchange is
-    the groupBy(min) whose map-side partial aggregation ships just
-    ``perms`` longs per doc per partition; the shingle STRINGS never
-    shuffle (the old global .distinct() shipped them all)."""
+    The grams are RAW — per-doc duplicates kept, as min is insensitive to
+    them — so the gram strings never shuffle; the only exchange is the
+    groupBy(min), whose partial aggregation ships ``perms`` longs per doc
+    per partition.  The int index array is exploded and the gram built
+    above the Generate (building the string array under the explode
+    measured ~2× slower at sf1.0), and the permutation hashes are flat
+    codegen'd projections (a transform() with xxhash64 inside is
+    interpreted per element — ~40× slower at sf1.0)."""
+    # spread the corpus before the hash-heavy signature pipeline: the
+    # driver-generated parquet has 1-2 row groups, so without this the
+    # explode + 8-permutation hashing runs on ≤2 of the session's cores
+    # (a row group is the parquet split unit).  The shuffle moves only the
+    # few-MB text column; partition count follows the session parallelism,
+    # not a local constant.
+    spread = docs.repartition(
+        docs.sparkSession.sparkContext.defaultParallelism
+    )
+    d, idx, gram = grams(spread)
+    raw = d.select("*", F.explode(idx).alias("_i")).select(
+        "doc_id", gram(F.col("_i")).alias("shingle")
+    )
     rows_per_band = perms // bands
     hashes = raw.select(
         "doc_id",
@@ -658,7 +656,7 @@ def _melted_from_raw(
     )
     band_structs = [
         F.struct(
-            F.lit(b).alias("b"),
+            F.lit(b).alias("band"),
             F.xxhash64(
                 F.concat_ws(
                     "|", F.lit(b),
@@ -670,93 +668,30 @@ def _melted_from_raw(
     ]
     return sig.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.b", "bb.bucket")
-
-
-def _lsh_jaccard_pairs(
-    docs: DataFrame, build_raw, build_arr,
-    perms: int, bands: int, cap: int, salt: str
-) -> DataFrame:
-    """Shared banded-MinHash candidate generation + exact-Jaccard confirm —
-    entirely Catalyst built-ins.  ``build_raw``: docs → raw (doc_id,
-    shingle) rows (duplicates fine — feeds the duplicate-insensitive
-    signature); ``build_arr``: docs → (doc_id, distinct shingle array)
-    (feeds the in-row Jaccard confirm).
-
-    raw shingles → banded signature (``_melted_from_raw``: codegen'd
-    hashes, one partial-agg groupBy) → ONE bucket groupBy collecting member
-    lists → in-row (a < b) pair enumeration → distinct pairs →
-    exact-Jaccard confirm via array_intersect over the candidate docs'
-    arrays only.
-
-    100-TB shape: the bucket groupBy replaces the all-pairs product; hot
-    buckets (empty/boilerplate docs all hashing together) are CAPPED at
-    ``cap`` members and dropped above it, bounding any bucket's quadratic
-    blowup (pair lists are ≤ cap²/2 per bucket).  The confirm semi-joins
-    the corpus down to candidate docs BEFORE shingling, so full-corpus text
-    is scanned exactly twice (signatures + confirm filter) and never
-    shuffled.  Round 6: this replaced a 104-Exchange plan (explode +
-    global distinct + 3× recomputed signature subtrees + bucket self-join)
-    with a 2-shuffle plan — set-identical output (same hashes, same caps,
-    same integer Jaccard)."""
-    # spread the corpus before the hash-heavy signature pipeline: the
-    # driver-generated parquet has 1-2 row groups, so without this the
-    # explode + 8-permutation hashing runs on ≤2 of the session's cores
-    # (a row group is the parquet split unit).  The shuffle moves only the
-    # few-MB text column; partition count follows the session parallelism,
-    # not a local constant.
-    spread = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    )
-    melted = _melted_from_raw(build_raw(spread), perms, bands, salt)
-    members = (
-        melted.groupBy("b", "bucket")
-        .agg(F.collect_list("doc_id").alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= cap))
-        .select(F.array_sort("ms").alias("ms"))
-    )
-    # in-row (a < b) enumeration over the sorted member list — the same
-    # pair set the old bucket self-join produced, without rejoining
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("ms") - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size("ms") - 1),
-                lambda j: F.struct(
-                    F.get("ms", i).alias("doc_a"), F.get("ms", j).alias("doc_b")
-                ),
-            ),
-        )
-    )
-    pairs = (
-        members.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-        # pairs feeds three downstream subtrees (candidate-doc semi-join +
-        # two broadcast joins); an eager localCheckpoint evaluates the
-        # signature pipeline ONCE instead of once per subtree (the tiny
-        # pair table is all that is pinned)
-        .localCheckpoint(eager=True)
-    )
-    return _jaccard_confirm_arrays(docs, build_arr, pairs)
+    ).select("bb.band", "bb.bucket", "doc_id")
 
 
 def _jaccard_confirm_arrays(
-    docs: DataFrame, build_arr, pairs: DataFrame
+    docs: DataFrame, grams, pairs: DataFrame
 ) -> DataFrame:
-    """Exact set-Jaccard (integer milli) for candidate (doc_a, doc_b) pairs:
-    semi-join the corpus down to candidate docs FIRST (tiny pair-doc set
-    broadcast into the docs scan — the full corpus is never shingled here,
-    only filtered), then join each pair to its two shingle ARRAYS and
-    compute the intersection in-row (array_intersect of per-doc-distinct
-    arrays == the old exploded-row intersection count)."""
+    """Exact set-Jaccard (integer milli) of candidate (doc_a, doc_b) pairs,
+    duplicates allowed: semi-join the corpus down to candidate docs FIRST
+    (the tiny pair-doc set broadcast into the docs scan — the full corpus
+    is only filtered, never gram'd here), then join each pair to its two
+    per-doc DISTINCT gram arrays and count the intersection in-row."""
+    # pairs feeds three downstream subtrees (candidate-doc semi-join + two
+    # broadcast joins); an eager localCheckpoint evaluates the candidate
+    # pipeline ONCE instead of once per subtree (the tiny pair table is
+    # all that is pinned)
+    pairs = pairs.distinct().localCheckpoint(eager=True)
     cand_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    cand_arr = build_arr(
-        docs.join(F.broadcast(cand_docs), "doc_id", "semi")
+    d, idx, gram = grams(docs.join(F.broadcast(cand_docs), "doc_id", "semi"))
+    cand_arr = d.select(
+        "doc_id", F.array_distinct(F.transform(idx, gram)).alias("shingles")
     )
     sa = cand_arr.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
@@ -779,54 +714,24 @@ def _jaccard_confirm_arrays(
     )
 
 
-def _jaccard_confirm(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact set-Jaccard (integer milli) for candidate (doc_a, doc_b)
-    pairs over a (doc_id, shingle) table.  Candidate-pair tables are tiny
-    relative to the corpus, so every join here broadcasts the pair side
-    INTO the shingle scan — the corpus shingle table never shuffles."""
-    # exact-Jaccard confirm: candidate pairs only (pairs ≪ corpus → broadcast)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    # semi-join the doc_b shingle side down to candidate docs FIRST (the
-    # tiny pair-doc set broadcast into the shingle scan), so the
-    # (doc_b, shingle) equi-join below shuffles only candidate docs'
-    # shingles — never the full corpus shingle table
-    sb = (
-        shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-        .join(F.broadcast(pairs.select("doc_b").distinct()), "doc_b", "semi")
-    )
-    inter = (
-        F.broadcast(pairs).join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter_ct"))
-    )
-    confirmed = pairs.join(inter, ["doc_a", "doc_b"], "left").na.fill({"inter_ct": 0})
-    # sizes is O(corpus) — broadcast the (small) pair table INTO it, twice
-    return (
-        sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-        .join(F.broadcast(confirmed), "doc_a")
-        .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-                .join(F.broadcast(confirmed.select("doc_b").distinct()), "doc_b")
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(
-                F.lit(1000) * F.col("inter_ct")
-                / (F.col("na") + F.col("nb") - F.col("inter_ct"))
-            ).cast("long").alias("jaccard_milli"),
-        )
-    )
+def _lsh_jaccard_pairs(
+    docs: DataFrame, grams, perms: int, bands: int, cap: int, salt: str
+) -> DataFrame:
+    """MinHash self-join: (doc_id, text) docs → (doc_a < doc_b,
+    jaccard_milli) for every doc pair sharing a band bucket of ≤ ``cap``
+    members — signature (_minhash_melted) → bucket pairs (_bucket_pairs)
+    → exact confirm (_jaccard_confirm_arrays), all Catalyst built-ins.
+    100-TB shape: no all-pairs product; full-corpus text is scanned twice
+    (signatures + confirm filter) and shuffled only by the spread."""
+    pairs = _bucket_pairs(
+        _minhash_melted(docs, grams, perms, bands, salt), cap
+    ).select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+    return _jaccard_confirm_arrays(docs, grams, pairs)
 
 
 def minhash_lsh_candidates(spark, sf_dir):
     """Near-duplicate pairs via word-3-gram MinHash + LSH banding +
-    exact-Jaccard confirm (shared skeleton: ``_lsh_jaccard_pairs``).
+    exact-Jaccard confirm (``_lsh_jaccard_pairs``).
 
     Oracle: constructed fixture — same algorithm run by an independent
     pure-python mirror (oracle_fixtures.build_minhash) on sf0.01, using the
@@ -836,50 +741,11 @@ def minhash_lsh_candidates(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return _lsh_jaccard_pairs(
-        docs, _doc_shingles_raw, _doc_shingle_arrays,
-        MINHASH_PERMS, MINHASH_BANDS, MINHASH_BUCKET_CAP, "p"
+        docs, _word_grams, MINHASH_PERMS, MINHASH_BANDS, MINHASH_BUCKET_CAP, "p"
     )
 
 
 QUERIES["minhash_lsh_candidates"] = minhash_lsh_candidates
-
-
-def _char_ngram_expr(docs: DataFrame, n: int):
-    d = docs.select("doc_id", "text")
-    ln = F.length("text")
-    idx = F.when(ln >= n, F.sequence(F.lit(1), ln - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(idx, lambda i: F.col("text").substr(i, F.lit(n)))
-    return d, grams
-
-
-def _doc_char_ngrams_raw(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingle): character n-grams WITH per-doc duplicates — for
-    the duplicate-insensitive MinHash signature (see _doc_shingles_raw:
-    index explode + substr above the Generate, no distinct)."""
-    d = docs.select("doc_id", "text")
-    ln = F.length("text")
-    idx = F.when(ln >= n, F.sequence(F.lit(1), ln - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return d.select("doc_id", "text", F.explode(idx).alias("_i")).select(
-        "doc_id", F.col("text").substr(F.col("_i"), F.lit(n)).alias("shingle")
-    )
-
-
-def _doc_char_ngram_arrays(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingles array<string>): per-doc DISTINCT character n-grams
-    as a per-row array (array_distinct in the row — never exploded; feeds
-    the array_intersect Jaccard confirm)."""
-    d, grams = _char_ngram_expr(docs, n)
-    return d.select("doc_id", F.array_distinct(grams).alias("shingles"))
-
-
-def _doc_char_ngrams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingle): distinct CHARACTER n-grams — per-row substring
-    transform, no shuffle before the distinct."""
-    return _doc_char_ngrams_raw(docs, n).distinct()
 
 
 def ngram_jaccard_pairs(spark, sf_dir):
@@ -902,9 +768,7 @@ def ngram_jaccard_pairs(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return _lsh_jaccard_pairs(
-        docs,
-        lambda d: _doc_char_ngrams_raw(d, NGJ_N),
-        lambda d: _doc_char_ngram_arrays(d, NGJ_N),
+        docs, lambda d: _char_grams(d, NGJ_N),
         NGJ_PERMS, NGJ_BANDS, NGJ_BUCKET_CAP, "q"
     ).where(F.col("jaccard_milli") >= NGJ_THRESHOLD_MILLI)
 
@@ -1907,8 +1771,7 @@ def near_dup_clusters(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = _lsh_jaccard_pairs(
-        docs, _doc_shingles_raw, _doc_shingle_arrays,
-        MINHASH_PERMS, MINHASH_BANDS, MINHASH_BUCKET_CAP, "p"
+        docs, _word_grams, MINHASH_PERMS, MINHASH_BANDS, MINHASH_BUCKET_CAP, "p"
     ).where(F.col("jaccard_milli") >= CLUSTER_THRESHOLD_MILLI)
     cc = connected_components(pairs, a="doc_a", b="doc_b")
     labeled = (
@@ -2180,23 +2043,23 @@ def topk_per_source(spark, sf_dir):
 # Image-modality training-data op: pHash NEAR-DUPLICATE pairs — the image
 # analogue of MinHash text dedup.  Two crawls of the same image (recompress,
 # resize, re-encode) produce perceptual hashes a few bits apart; exact-hash
-# dedup (O5) misses them.  Banded self-join: the 64-bit phash splits into
-# PHASH_BANDS 16-bit bands; by pigeonhole, Hamming ≤ PHASH_MAX_HAMMING
-# implies at least one band matches exactly, so the (band, value) equi-join
-# finds EVERY true pair — recall 1.0, no all-pairs product — and the cheap
-# bit_count(xor) confirm rejects band-collision false positives JVM-side.
-# 100-TB shape: explode ×4, shuffle on (band, value), per-bucket cap
-# (PHASH_BUCKET_CAP) guards degenerate hot bands (e.g. flat-color images
-# sharing an all-zero band); everything is integer Catalyst — no UDF, no
-# float.  Oracle: INDEPENDENT brute-force popcount mirror
-# (oracle_fixtures.build_phash_near_dup — no banding), exact because the
-# pigeonhole guarantee is lossless and the fixture asserts the cap never
-# binds at fixture scale.
+# dedup (O5) misses them.  The 64-bit phash splits into PHASH_BANDS 16-bit
+# bands; by pigeonhole, Hamming ≤ PHASH_MAX_HAMMING implies at least one
+# band matches exactly, so pairing the images of every (band, value)
+# bucket finds EVERY true pair — recall 1.0, no all-pairs product — and
+# the bit_count(xor) confirm rejects band-collision false positives.
+# 100-TB shape: explode ×4 into (band, value) buckets, then the shared
+# capped bucket-pair skeleton (_bucket_pairs; PHASH_BUCKET_CAP guards hot
+# bands, e.g. flat-color images sharing an all-zero band); everything is
+# integer Catalyst — no UDF, no float.  Oracle: INDEPENDENT brute-force
+# popcount mirror (oracle_fixtures.build_phash_near_dup — no banding),
+# exact because the pigeonhole guarantee is lossless and the fixture
+# asserts the cap never binds at fixture scale.
 # ---------------------------------------------------------------------------
 def _phash_banded_pairs(sdf: DataFrame) -> DataFrame:
-    """(image_id, phash) → near-dup pairs via the banded self-join described
-    above — shared by the precomputed-hash entry and the decode-from-bytes
-    chain entry."""
+    """(image_id, phash) keyed by image_id → (image_a < image_b, hamming)
+    near-dup pairs — shared by the precomputed-hash entry, the
+    decode-from-bytes chain entry and the image clustering."""
     from .oracle_fixtures import (
         PHASH_BANDS,
         PHASH_BUCKET_CAP,
@@ -2214,30 +2077,17 @@ def _phash_banded_pairs(sdf: DataFrame) -> DataFrame:
             for i in range(PHASH_BANDS)
         ])
     ).alias("bv")
-    keyed = sdf.select("image_id", "phash", bands).select(
-        "image_id", "phash", F.col("bv.band").alias("band"),
-        F.col("bv.bval").alias("bval"),
+    keyed = sdf.select(bands, F.struct("image_id", "phash").alias("m")).select(
+        "bv.band", "bv.bval", "m"
     )
-    ok = (
-        keyed.groupBy("band", "bval")
-        .agg(F.count(F.lit(1)).alias("ct"))
-        .where(F.col("ct") <= PHASH_BUCKET_CAP)
-        .select("band", "bval")
-    )
-    capped = keyed.join(ok, ["band", "bval"])
-    a = capped.select(
-        "band", "bval",
-        F.col("image_id").alias("image_a"), F.col("phash").alias("ph_a"),
-    )
-    b = capped.select(
-        "band", "bval",
-        F.col("image_id").alias("image_b"), F.col("phash").alias("ph_b"),
-    )
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
+    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
     return (
-        a.join(b, ["band", "bval"])
-        .where(F.col("image_a") < F.col("image_b"))
-        .select("image_a", "image_b", ham.cast("long").alias("hamming"))
+        _bucket_pairs(keyed, PHASH_BUCKET_CAP)
+        .select(
+            F.col("a.image_id").alias("image_a"),
+            F.col("b.image_id").alias("image_b"),
+            ham.cast("long").alias("hamming"),
+        )
         .where(F.col("hamming") <= PHASH_MAX_HAMMING)
         .distinct()
     )
@@ -2258,16 +2108,16 @@ def phash_near_dup_pairs(spark, sf_dir):
 # pHash near-dup from BYTES — the full image near-dup CHAIN, end-to-end:
 # decode the opaque payload with the engine codec (column-pruned Arrow
 # mapInPandas, the same kernel the crawl's payload validator runs), compute
-# phash64 from the decoded pixels, then the banded self-join above.  The
-# precomputed-hash entry certifies the join; THIS entry certifies that the
+# phash64 from the decoded pixels, then the banded pairs above.  The
+# precomputed-hash entry certifies the pairing; THIS entry certifies that the
 # engine's decode → hash stage feeds it correctly: the oracle mirror
 # recomputes every hash from the same bytes through the INDEPENDENT decoder
 # (oracle_fixtures.mirror_decode + _mirror_phash) and brute-force popcounts
 # all pairs.  Input: the shared T2 image corpus plus deterministic
 # re-encoded "second crawl" variants (same pixels, different lossy format
 # → hashes 0-1 bits apart).  100-TB shape: decode is map-only over pruned
-# (id, bytes) columns; the join shuffles 16-byte (band, bval) keys, never
-# payload bytes.
+# (id, bytes) columns; the bucket shuffle moves (band, bval, id, phash)
+# rows, never payload bytes.
 # ---------------------------------------------------------------------------
 @q("phash_bytes_chain_pairs", _fx("phash_bytes_chain_pairs"))
 def phash_bytes_chain_pairs(spark, sf_dir):
@@ -2851,78 +2701,61 @@ def ngram_decontaminate(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Training-data op: INCREMENTAL near-dup — dedup a NEW crawl batch against
-# the EXISTING corpus without re-pairing the corpus with itself.  This is
-# the shape a continuous crawl actually runs every ingest cycle: the
-# self-join near-dup pass (minhash_lsh_candidates) is an O(corpus)
-# backfill job, while steady-state ingest only needs batch×corpus edges.
-# Batch membership is deterministic here (doc_id % 5 == 4 ≈ 20% of docs
-# stand in for "this cycle's crawl"); production passes a real batch table.
+# the EXISTING corpus without reporting corpus pairs.  This is the shape a
+# continuous crawl actually runs every ingest cycle: the self-join near-dup
+# pass (minhash_lsh_candidates) is an O(corpus) backfill job, while
+# steady-state ingest only needs batch×corpus edges.  Batch membership is
+# deterministic here (doc_id % 5 == 4 ≈ 20% of docs stand in for "this
+# cycle's crawl"); production passes a real batch table.
 #
-# 100-TB shape: both sides share ONE banded-signature build
-# (_minhash_melted — the corpus side's signatures would be precomputed
-# and stored in production); the bucket join touches only buckets holding
-# BOTH a batch and a corpus member, with the same hot-bucket cap as the
-# self-join, so cost scales with the BATCH, not corpus².  The confirm
-# broadcasts candidate pairs into the shingle scan (shared
-# _jaccard_confirm).  Oracle: independent pure-python mirror
+# Shape: the self-join's signature (_minhash_melted) and bucket pairs
+# (_bucket_pairs, same hot-bucket cap) with the batch flag carried in the
+# member struct.  Same-side pairs are dropped right after the in-row
+# enumeration (≤ cap²/2 per bucket, no extra shuffle); the rest are
+# oriented batch → corpus and go through the shared exact confirm
+# (_jaccard_confirm_arrays).  In production the corpus side's signatures
+# would be precomputed and stored.  Oracle: independent pure-python mirror
 # (oracle_fixtures.build_incremental_minhash) on the spec-XXH64.
 # ---------------------------------------------------------------------------
-def _lsh_bipartite_pairs(
-    shingles: DataFrame,
-    is_batch,
-    perms: int,
-    bands: int,
-    cap: int,
-    salt: str,
-) -> DataFrame:
-    melted = _minhash_melted(shingles, perms, bands, salt)
-    tagged = melted.withColumn("is_batch", is_batch)
-    stats = tagged.groupBy("b", "bucket").agg(
-        F.count(F.lit(1)).alias("ct"),
-        F.sum(F.col("is_batch").cast("int")).alias("n_batch"),
+def incremental_minhash_core(docs: DataFrame, is_batch) -> DataFrame:
+    """(doc_id, text) docs + a batch-membership Column over doc_id →
+    (batch_doc, corpus_doc, jaccard_milli).  Separate from the entry so
+    tests can plant batch/corpus near-dups on constructed docs."""
+    from .oracle_fixtures import (
+        MINHASH_BANDS,
+        MINHASH_BUCKET_CAP,
+        MINHASH_PERMS,
     )
-    ok_buckets = stats.where(
-        (F.col("ct") <= cap)
-        & (F.col("n_batch") >= 1)
-        & (F.col("ct") > F.col("n_batch"))  # ≥1 corpus member too
-    ).select("b", "bucket")
-    capped = tagged.join(ok_buckets, ["b", "bucket"])
+
+    keyed = _minhash_melted(
+        docs, _word_grams, MINHASH_PERMS, MINHASH_BANDS, "p"
+    ).select(
+        "band", "bucket", F.struct("doc_id", is_batch.alias("is_batch")).alias("m")
+    )
+    a_batch = F.col("a.is_batch")
+    a_id, b_id = F.col("a.doc_id"), F.col("b.doc_id")
     pairs = (
-        capped.where("is_batch")
-        .select("b", "bucket", F.col("doc_id").alias("doc_a"))
-        .join(
-            capped.where(~F.col("is_batch"))
-            .select("b", "bucket", F.col("doc_id").alias("doc_b")),
-            ["b", "bucket"],
+        _bucket_pairs(keyed, MINHASH_BUCKET_CAP)
+        .where(a_batch != F.col("b.is_batch"))
+        .select(
+            F.when(a_batch, a_id).otherwise(b_id).alias("doc_a"),
+            F.when(a_batch, b_id).otherwise(a_id).alias("doc_b"),
         )
-        .select("doc_a", "doc_b")
-        .distinct()
     )
-    return _jaccard_confirm(shingles, pairs)
+    return _jaccard_confirm_arrays(docs, _word_grams, pairs).select(
+        F.col("doc_a").alias("batch_doc"),
+        F.col("doc_b").alias("corpus_doc"),
+        "jaccard_milli",
+    )
 
 
 @q("incremental_minhash_dedup")
 def incremental_minhash_dedup(spark, sf_dir):
-    from .oracle_fixtures import (
-        INC_BATCH_MOD,
-        MINHASH_BANDS,
-        MINHASH_BUCKET_CAP,
-        MINHASH_PERMS,
-    )
+    from .oracle_fixtures import INC_BATCH_MOD
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = _lsh_bipartite_pairs(
-        _doc_shingles(docs),
-        F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1,
-        MINHASH_PERMS,
-        MINHASH_BANDS,
-        MINHASH_BUCKET_CAP,
-        "p",
-    )
-    return out.select(
-        F.col("doc_a").alias("batch_doc"),
-        F.col("doc_b").alias("corpus_doc"),
-        "jaccard_milli",
+    return incremental_minhash_core(
+        docs, F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1
     )
 
 
@@ -3065,11 +2898,11 @@ def caption_dedup_generic(spark, sf_dir):
 # Composed image-corpus curation — the end-to-end pass a multimodal
 # training pipeline runs over crawled (image, caption) pairs, as ONE
 # entry: LAION-style filter -> generic-caption dedup among the filter's
-# survivors -> pHash near-dup keep-one (banded self-join + distributed
+# survivors -> pHash near-dup keep-one (banded bucket pairs + distributed
 # connected components, min-id canonical) among survivors of both.  Stage
 # flags are False for rows dropped upstream (the stage never saw them).
 # Shapes at 100 TB: scan-stage filter, broadcast caption dim, capped
-# banded join + O(log n) star iterations — no all-pairs product anywhere.
+# banded buckets + O(log n) star iterations — no all-pairs product anywhere.
 # Mirror: oracle_fixtures.build_image_training_pipeline (brute popcount +
 # union-find over the same planted corpus, incl. the hv%11==5 one-bit
 # pHash near-dup plants).

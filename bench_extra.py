@@ -57,16 +57,6 @@ def run_queries_noop(cpus: int, sf_dir: str) -> dict:
     return out
 
 
-def run_crawl_laps(cpus: int) -> dict:
-    import bench
-
-    os.environ.setdefault("ABWCF_BENCH_HOSTS", "192")
-    os.environ.setdefault("ABWCF_BENCH_URLS", "750")
-    paths = bench.materialize_corpus()
-    res = bench.run_crawl(cpus, paths)
-    return res
-
-
 def run_crawl_laps_detailed(cpus: int) -> dict:
     """Like bench.run_crawl but returns per-round laps (needs the crawler
     object, so this re-implements the thin wrapper)."""

@@ -44,6 +44,24 @@ def test_t1_micro(spark, use_bloom):
     assert res.fetch_seq > 0
 
 
+def test_graph_only_corpus(spark):
+    """A link-graph corpus with no payload columns (neither bytes nor
+    content_length) must crawl exactly like the oracle: every body size is
+    unknown, so no page is too big to parse."""
+    tables = gen_corpus(T1_MICRO)
+    tables["corpus"] = tables["corpus"].drop(columns=["bytes", "content_length"])
+    oracle = crawl_oracle(
+        tables["corpus"], tables["robots"], tables["seeds"], CrawlConfig()
+    )
+    sdfs = corpus_to_spark(spark, tables)
+    res = SparkCrawler(
+        spark, sdfs["corpus"].drop("bytes", "content_length"), sdfs["robots"],
+        collect_metrics=False,
+    ).run(seeds=sdfs["seeds"])
+    assert_crawl_equal(res, oracle)
+    assert res.fetch_seq > 0
+
+
 def test_t1_metrics_match_oracle(spark):
     res, oracle = run_both(spark, T1_MICRO, collect_metrics=True)
     for s_m, o_m in zip(res.metrics, oracle.metrics):

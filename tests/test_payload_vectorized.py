@@ -114,6 +114,34 @@ def test_phash64_batch_quantized_ties():
         assert (got == want).all(), (w, h)
 
 
+def _equal_mean_blocks(w: int, h: int, seed: int) -> np.ndarray:
+    """An image whose 64 phash blocks hold the SAME pixels, each block in
+    its own random order: every block mean equals the image mean in exact
+    arithmetic, so each hash bit is decided by float rounding alone — the
+    tie that exposes any difference in summation order."""
+    rng = np.random.default_rng(seed)
+    bh, bw = h // 8, w // 8
+    tile = rng.integers(0, 256, size=(bh * bw, 3), dtype=np.uint8)
+    out = np.empty((h, w, 3), dtype=np.uint8)
+    for i in range(8):
+        for j in range(8):
+            out[i * bh:(i + 1) * bh, j * bw:(j + 1) * bw] = (
+                tile[rng.permutation(bh * bw)].reshape(bh, bw, 3)
+            )
+    return out
+
+
+def test_phash64_batch_large_blocks_match_scalar():
+    # blocks above numpy's 8192-element ufunc buffer (≳ 724 px a side) are
+    # summed in buffer chunks by phash64's .mean(); the batch path must
+    # give the same bits there too
+    for w, h in [(800, 800), (832, 832), (1024, 768)]:
+        stack = np.stack([_equal_mean_blocks(w, h, k) for k in range(4)])
+        got = phash64_batch(stack)
+        want = np.asarray([phash64(im) for im in stack], dtype=np.int64)
+        assert (got == want).all(), (w, h)
+
+
 def test_decode_fast_paths_round_trip():
     for i, (w, h) in enumerate(SHAPES):
         px = gen_pixels(f"d-{i}", w, h)

@@ -241,8 +241,8 @@ def test_topk_per_source_is_two_phase_salted(spark):
 
 
 def test_phash_near_dup_no_cartesian(spark):
-    """The banded pHash self-join must stay an equi-join on (band, bval) —
-    never a cartesian/nested-loop product."""
+    """The banded pHash pairs must stay bucketed on (band, bval) — never a
+    cartesian/nested-loop product."""
     from abwcf_spark.queries import phash_near_dup_pairs
 
     p = plan(phash_near_dup_pairs(spark, _sf_dir("0.01")))

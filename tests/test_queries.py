@@ -113,6 +113,80 @@ def test_minhash_bucket_cap_bounds_degenerate_skew(spark):
     )
 
 
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The node lines below node ``i`` of a simple-mode plan tree (deeper
+    indentation than the node itself, up to its next sibling)."""
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = []
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_minhash_hot_bucket_capped_before_collection(spark, monkeypatch):
+    """A hot LSH bucket (cap + 1000 identical boilerplate docs) must be
+    dropped by its COUNT before any member list is collected: the planted
+    near-dup pairs still come back, no boilerplate pair does, and in the
+    candidate-pair plan the bucket-count filter sits below the
+    collect_list aggregate (filtering the collected list's size would hold
+    the whole hot bucket in one array first)."""
+    import tempfile
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from abwcf_spark.oracle_fixtures import MINHASH_BUCKET_CAP
+    from abwcf_spark.queries import minhash_lsh_candidates
+    from tests.test_plans import plan
+
+    boiler = "accept all cookies to continue reading our privacy policy and terms"
+    n = MINHASH_BUCKET_CAP + 1000
+    rows = [(i, boiler) for i in range(n)]
+    planted = []
+    for k in range(4):
+        words = [f"topic{k}word{t}" for t in range(40)]
+        a, b = 100_000 + 2 * k, 100_001 + 2 * k
+        rows += [(a, " ".join(words)), (b, " ".join(words[:-1] + ["edited"]))]
+        planted.append((a, b))
+    docs = pd.DataFrame(
+        [{"doc_id": i, "text": t, "lang": "en", "source": "t",
+          "n_chars": len(t)} for i, t in rows]
+    )
+    # the candidate-pair table is pinned with localCheckpoint; capture the
+    # DataFrame it is called on to inspect the plan that built the pairs
+    pinned = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        pinned.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(docs).write.parquet(f"{d}/documents.parquet")
+        pairs = minhash_lsh_candidates(spark, d).toPandas()
+    edges = set(zip(pairs.doc_a, pairs.doc_b))
+    for p in planted:
+        assert p in edges, f"planted pair {p} lost"
+    assert not ((pairs.doc_a < n) | (pairs.doc_b < n)).any(), (
+        f"hot bucket leaked {len(pairs)} pairs"
+    )
+
+    assert pinned, "candidate pairs were not pinned"
+    lines = plan(pinned[0], mode="simple").splitlines()
+    aggs = [i for i, ln in enumerate(lines)
+            if "ObjectHashAggregate" in ln and "collect_list" in ln]
+    assert aggs, "\n".join(lines)
+    cap_filter = f"<= {MINHASH_BUCKET_CAP})"
+    below = _subtree(lines, aggs[0])
+    assert any("Filter" in ln and cap_filter in ln for ln in below), (
+        "bucket cap is applied after collect_list:\n" + "\n".join(lines)
+    )
+
+
 def test_minhash_recall_measured_against_lsh_theory(spark):
     """Measured MinHash-LSH candidate recall across the similarity
     spectrum, checked against the banding theory curve.
@@ -708,10 +782,7 @@ def test_incremental_minhash_bipartite_semantics(spark):
     are NOT emitted (they belong to the backfill self-join, not the
     ingest pass); every reported edge is batch→corpus oriented."""
     from abwcf_spark.oracle_fixtures import INC_BATCH_MOD
-    from abwcf_spark.queries import (
-        _doc_shingles,
-        _lsh_bipartite_pairs,
-    )
+    from abwcf_spark.queries import incremental_minhash_core
     from pyspark.sql import functions as F
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
@@ -727,12 +798,10 @@ def test_incremental_minhash_bipartite_semantics(spark):
         (20, "tiny unrelated"),                  # corpus, disjoint
     ]
     sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    out = _lsh_bipartite_pairs(
-        _doc_shingles(sdf),
-        F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1,
-        8, 4, 50, "p",
+    out = incremental_minhash_core(
+        sdf, F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1
     ).collect()
-    edges = {(r.doc_a, r.doc_b) for r in out}
+    edges = {(r.batch_doc, r.corpus_doc) for r in out}
     assert (14, 10) in edges and (14, 11) in edges
     for a, b in edges:
         assert a % INC_BATCH_MOD == INC_BATCH_MOD - 1, "left side must be batch"
@@ -740,7 +809,7 @@ def test_incremental_minhash_bipartite_semantics(spark):
     assert not any({a, b} == {19, 24} for a, b in edges), "batch↔batch excluded"
     assert not any({a, b} == {10, 11} for a, b in edges), "corpus↔corpus excluded"
     # high-overlap planted pair confirms near-1000 milli-Jaccard
-    j = {(r.doc_a, r.doc_b): r.jaccard_milli for r in out}
+    j = {(r.batch_doc, r.corpus_doc): r.jaccard_milli for r in out}
     assert j[(14, 10)] > 700
 
 
