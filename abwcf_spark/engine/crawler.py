@@ -108,7 +108,10 @@ def metrics_stage_rows(m: dict) -> list[dict]:
     (``metrics/FilterMetrics.scala:176-182`` passed/rejected per filter,
     ``FetcherMetrics.scala:130-145`` fetch counters).  Pure formatting: the
     counts themselves come from the engine's Observations (or, for the
-    oracle fixture, from the pure-python simulator)."""
+    oracle fixture, from the pure-python simulator).  Every engine round
+    carries every stage count; a stage emits no row only when its keys are
+    optional and absent (bloom probe before the filter holds a key,
+    ``hosts_rows`` right after a resume, cuckoo counters, purge dicts)."""
     rnd = int(m["round"])
     rows: list[dict] = []
 
@@ -242,6 +245,10 @@ class SparkCrawler:
           (url, payload_ok boolean) shape — failed rows are counted into
           ``payload_failures``.  Default (with validate_payloads=True): the
           image decode + PSNR/phash/caption validator.
+
+        ``collect_metrics`` is ignored (per-stage counts always ride
+        Observations on jobs the round runs anyway); it is kept for the
+        callers that still pass it, ``bench.py`` and ``perfbench/worker.py``.
         """
         if seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(f"seen_filter must be bloom|cuckoo: {seen_filter}")
@@ -293,7 +300,6 @@ class SparkCrawler:
         self.seen_broadcast_limit = seen_broadcast_limit
         self.n_salts = n_salts
         self.validate_payloads = validate_payloads
-        self.collect_metrics = collect_metrics
         self.prioritizer = prioritizer
         self.fetch_consumer = fetch_consumer
         if fetch_consumer is None and validate_payloads:
@@ -370,6 +376,8 @@ class SparkCrawler:
         # hosts-commit Observation each round, and deliberately reset to
         # None on resume (unknown until the first post-resume commit)
         self._last_hosts_rows: int | None = 0
+        self._kicks_reported = 0  # cuckoo kick counter at the last round
+        self._leaf_rows_memo: dict[str, int] = {}  # see _leaf_rows
         self._bg = ThreadPoolExecutor(max_workers=1)  # bloom-update overlap
         self._bloom_future = None  # in-flight shard update (joined per round)
 
@@ -453,7 +461,7 @@ class SparkCrawler:
         )
 
     # ----------------------------------------------------------------- step
-    def _mat(self, df: DataFrame, parts: int | None = None) -> DataFrame:
+    def _mat(self, df: DataFrame) -> DataFrame:
         """Materialize an intermediate reused by several actions within the
         round: eager localCheckpoint flattens the plan, so downstream
         actions neither re-analyze the round DAG nor re-execute its
@@ -503,46 +511,41 @@ class SparkCrawler:
         cfg, rnd = self.cfg, self.rnd
         now_ms = rnd * self.round_ms
         m: dict = {"round": rnd}
-        if self.collect_metrics:
-            m["candidates"] = self.candidates.count()
+        # per-stage counts for the metrics table (O20): Observations that
+        # ride the candidate materialization below, at zero extra jobs
+        count = F.count(F.lit(1)).alias("n")
+        cand_obs = Observation(f"cand-r{rnd}")
+        norm_obs = Observation(f"norm-r{rnd}")
+        new_obs = Observation(f"new-r{rnd}")
 
         # O2 normalize + O3 filter (pandas UDF + Catalyst predicates)
         cand = (
-            self.candidates.withColumn("_norm", self._normalize_udf(F.col("url")))
+            self.candidates.observe(cand_obs, count)
+            .withColumn("_norm", self._normalize_udf(F.col("url")))
             .where(F.col("_norm").isNotNull())
             .select(F.col("_norm").alias("url"), "crawl_depth", "seq")
         )
-        cand = cand.where(url_filter_predicate(cfg, F.col("url")))
-        if self.collect_metrics:
-            cand = self._mat(cand)
-            m["normalized"] = cand.count()
+        cand = cand.where(url_filter_predicate(cfg, F.col("url"))).observe(
+            norm_obs, count
+        )
 
         # O4/O5 dedup: in-round first-discovery-wins + URL-seen
         cand = dedup_in_round(cand)
-        probe = None
+        probe = bloom_obs = None
         if self.bloom is not None and self.bloom.n_added > 0:
             probe = self.bloom.make_probe_udf()
+            bloom_obs = Observation(f"bloom-r{rnd}")
         # free upper bound on this round's candidate count = last round's
         # emitted count — gates the maybe-set broadcast without an extra job
         est = self.metrics[-1].get("emitted") if self.metrics else None
         # URL-seen membership needs only the insert-side chain (_data):
         # update deltas never introduce urls, so the MoR reconcile anti-join
         # is skipped entirely on this hot path
-        bloom_obs = None
-        if probe is not None and self.collect_metrics:
-            bloom_obs = Observation(f"bloom-r{rnd}")
         cand = url_seen_filter(
             cand, self._data, probe,
             est_candidates=est, broadcast_limit=self.seen_broadcast_limit,
             flag_observation=bloom_obs,
-        )
-        if self.collect_metrics:
-            cand = self._mat(cand)
-            m["new_urls"] = cand.count()
-            if bloom_obs is not None:
-                g = bloom_obs.get
-                m["bloom_probed"] = int(g["n"])
-                m["bloom_pos"] = int(g["pos"] or 0)
+        ).observe(new_obs, count)
 
         # O7 lenient robots (fail-open, hosts as of round start).  The
         # _rules_missing flag rides the SAME materialization job as an
@@ -561,14 +564,19 @@ class SparkCrawler:
             cand.observe(
                 need_obs,
                 F.sum(F.col("_rules_missing").cast("long")).alias("miss"),
-                F.count(F.lit(1)).alias("n"),
+                count,
             )
-        )
+        ).drop("_rules_missing")
         g = need_obs.get
         n_rules_missing = int(g["miss"] or 0)
-        cand = cand.drop("_rules_missing")
-        if self.collect_metrics:
-            m["lenient_passed"] = int(g["n"])
+        m["candidates"] = int(cand_obs.get["n"])
+        m["normalized"] = int(norm_obs.get["n"])
+        m["new_urls"] = int(new_obs.get["n"])
+        if bloom_obs is not None:
+            b = bloom_obs.get
+            m["bloom_probed"] = int(b["n"])
+            m["bloom_pos"] = int(b["pos"] or 0)
+        m["lenient_passed"] = int(g["n"])
         _lap("cand")
 
         # O16/O17 robots refresh-on-ACCESS (HostManager.scala:187-189): a
@@ -623,8 +631,7 @@ class SparkCrawler:
                 refreshed.select("scheme_and_authority"),
                 "scheme_and_authority", "left_anti"
             ).unionByName(refreshed)
-        if self.collect_metrics:
-            m["robots_fetched"] = n_refreshed
+        m["robots_fetched"] = n_refreshed
 
         # fetch-time strict robots (StrictRobotsFilter.scala:72-133): rules
         # changed only for hosts refreshed THIS round, so only their
@@ -809,24 +816,21 @@ class SparkCrawler:
             new_rows, upd_delta, n_fetched + n_newly_dis,
             hosts_next2, emitted,
         )
-        m.update(getattr(self, "_commit_laps", {}))
+        m.update(self._commit_laps)
         m["emitted"] = n_emitted
-        if self.collect_metrics:
-            # entity-count gauges (CacheMetrics.scala:53-69 /
-            # ClusterNodeMetricsCollector.scala analogues) — all driver-known
-            # or riding the hosts commit Observation, zero extra jobs
-            if getattr(self, "_last_hosts_rows", None) is not None:
-                m["hosts_rows"] = self._last_hosts_rows
-            m["frontier_rows"] = self.frontier_rows
+        # entity-count gauges (CacheMetrics.scala:53-69 /
+        # ClusterNodeMetricsCollector.scala analogues) — all driver-known
+        # or riding the hosts commit Observation, zero extra jobs
+        if self._last_hosts_rows is not None:
+            m["hosts_rows"] = self._last_hosts_rows
+        m["frontier_rows"] = self.frontier_rows
         if bloom_future is not None:
             m["inserted"] = bloom_future.result()
             self._bloom_future = None
-        if isinstance(self.bloom, ShardedCuckoo) and self.collect_metrics:
+        if isinstance(self.bloom, ShardedCuckoo):
             # eviction gauge delta for this round's inserts (the kick
             # counter is cumulative session-scope on the sharded store)
-            m["seen_kicks"] = self.bloom.n_kicks - getattr(
-                self, "_kicks_reported", 0
-            )
+            m["seen_kicks"] = self.bloom.n_kicks - self._kicks_reported
             self._kicks_reported = self.bloom.n_kicks
         _lap("commit")
         self.metrics.append(m)
@@ -853,12 +857,10 @@ class SparkCrawler:
         (one immutable parquet file per round, keyed by round so a resumed
         run that replays a round idempotently overwrites its file; purge
         calls pass an explicit ``name`` so they never collide with the
-        round's own file).  Counts are driver-known scalars from the
-        round's Observations — writing is a local pyarrow call, no Spark
-        job."""
+        round's own file).  Runs for every round and every purge.  Counts
+        are driver-known scalars from the round's Observations — writing is
+        a local pyarrow call, no Spark job."""
         rows = metrics_stage_rows(m)
-        if not rows:
-            return
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -952,8 +954,7 @@ class SparkCrawler:
 
         m = {"round": self.rnd, "purged": n_purged, "seen_deletes": removed}
         self.metrics.append(m)
-        if self.collect_metrics:
-            self._append_metrics(m, name=f"purge-{self.rnd:06d}-{seq:03d}")
+        self._append_metrics(m, name=f"purge-{self.rnd:06d}-{seq:03d}")
         if self.checkpoint_dir:
             self._checkpoint()
         return n_purged
@@ -1145,9 +1146,7 @@ class SparkCrawler:
         serial driver term inside the commit path."""
         import pyarrow.parquet as pq
 
-        memo = getattr(self, "_leaf_rows_memo", None)
-        if memo is None:
-            memo = self._leaf_rows_memo = {}
+        memo = self._leaf_rows_memo
         total = 0
         for p in paths:
             n = memo.get(p)
@@ -1164,6 +1163,10 @@ class SparkCrawler:
         return total
 
     def _read_leaves(self, paths: list[str]) -> DataFrame:
+        # recursiveFileLookup: the bucket= dirs are a write-side layout
+        # (file sizing + selective-compaction handle), not a read-side
+        # partition column — skipping partition inference also sidesteps
+        # Spark's one-root-per-table restriction for multi-round chains
         return (
             self.spark.read.option("recursiveFileLookup", "true")
             .parquet(*paths)
@@ -1388,17 +1391,6 @@ class SparkCrawler:
         generation, and consolidated dirs exclude the buckets that pass
         major-compacted) — only base generations need per-bucket
         newest-wins selection when partial bases exist."""
-        # recursiveFileLookup: the bucket= dirs are a write-side layout
-        # (file sizing + selective-compaction handle), not a read-side
-        # partition column — skipping partition inference also sidesteps
-        # Spark's one-root-per-table restriction for multi-round chains
-        def _read(paths):
-            return (
-                self.spark.read.option("recursiveFileLookup", "true")
-                .parquet(*paths)
-                .select(*FRONTIER_COLS)
-            )
-
         if len(self.chain_base) <= 1:
             # single generation: read the whole dir, skip the leaf walk
             base_paths = list(self.chain_base)
@@ -1408,11 +1400,11 @@ class SparkCrawler:
             ]
         data_paths = base_paths + self.chain_ins
         self._data = (
-            _read(data_paths) if data_paths
+            self._read_leaves(data_paths) if data_paths
             else self.spark.createDataFrame([], FRONTIER_SCHEMA)
         )
         self._upd = (
-            _read(self.chain_upd) if self.chain_upd
+            self._read_leaves(self.chain_upd) if self.chain_upd
             else self.spark.createDataFrame([], FRONTIER_SCHEMA)
         )
         self.frontier = self._reconciled_frontier()

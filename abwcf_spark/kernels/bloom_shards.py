@@ -38,34 +38,16 @@ on a real cluster each executor pulls only the shards its tasks touch
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
 
 from .bloom import BloomFilter
-from .sharded_store import ShardedSeenStore
-
-# per-worker cache of immutable shard files, keyed on (path, mtime_ns, size):
-# versions are never rewritten (monotonic write counter), and the stat key
-# makes even an out-of-protocol rewrite impossible to serve stale
-_SHARD_CACHE: OrderedDict[tuple, np.ndarray] = OrderedDict()
-_SHARD_CACHE_MAX = 64
+from .sharded_store import ShardedSeenStore, load_shard, shard_path
 
 
-def _load_words(path: str, n_words: int) -> np.ndarray:
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    words = _SHARD_CACHE.get(key)
-    if words is None:
-        words = np.fromfile(path, dtype=np.uint64)
-        assert len(words) == n_words, f"shard file {path}: {len(words)} != {n_words}"
-        _SHARD_CACHE[key] = words
-        while len(_SHARD_CACHE) > _SHARD_CACHE_MAX:
-            _SHARD_CACHE.popitem(last=False)
-    else:
-        _SHARD_CACHE.move_to_end(key)
-    return words
+def _read_words(path: str) -> np.ndarray:
+    return np.fromfile(path, dtype=np.uint64)
 
 
 def _shard_view(words: np.ndarray, n_hashes: int) -> BloomFilter:
@@ -123,11 +105,9 @@ class ShardedBloom(ShardedSeenStore):
             cur = versions.get(shard)
             bf = BloomFilter(n_bits, n_hashes)
             if cur is not None:
-                path = os.path.join(directory, f"shard={shard:05d}",
-                                    f"v={cur:06d}.bin")
-                bf.words = np.fromfile(path, dtype=np.uint64)
+                bf.words = _read_words(shard_path(directory, shard, cur))
             bf.add_hashes(hashes)
-            out = os.path.join(directory, f"shard={shard:05d}", f"v={wv:06d}.bin")
+            out = shard_path(directory, shard, wv)
             os.makedirs(os.path.dirname(out), exist_ok=True)
             tmp = out + f".tmp{os.getpid()}"
             bf.words.tofile(tmp)
@@ -168,22 +148,14 @@ class ShardedBloom(ShardedSeenStore):
                 v = versions.get(int(shard))
                 if v is None:
                     continue  # empty shard: provably never inserted
-                path = os.path.join(directory, f"shard={int(shard):05d}",
-                                    f"v={v:06d}.bin")
-                words = _load_words(path, n_words)
+                path = shard_path(directory, int(shard), v)
+                words = load_shard(path, _read_words)
+                assert len(words) == n_words, (
+                    f"shard file {path}: {len(words)} != {n_words}"
+                )
                 mask = shards == shard
                 out[mask] = _shard_view(words, n_hashes).might_contain(h[mask])
             return pd.Series(out, index=hashes.index)
 
         return probe
-
-    # ------------------------------------------------------------- rebuild
-    def rebuild_from(self, frontier) -> int:
-        """Coherence repair: reconstruct the whole set from a frontier
-        url_hash scan (restore-without-bloom-state, or external appends that
-        bypassed the round loop).  The rebuild gets its own write-counter
-        version, so a subsequent same-round add can never overwrite it."""
-        self.versions = {}
-        self.n_added = 0
-        return self.add_dataframe(frontier.select("url_hash"), "url_hash")
-    # prune() inherited from ShardedSeenStore
+    # rebuild_from() and prune() inherited from ShardedSeenStore

@@ -21,31 +21,17 @@ default for pure append-only crawls (the bench path).
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
 
 from .cuckoo import CuckooFilter
-from .sharded_store import ShardedSeenStore
-
-_FILTER_CACHE: OrderedDict[tuple, "CuckooFilter"] = OrderedDict()
-_FILTER_CACHE_MAX = 64
+from .sharded_store import ShardedSeenStore, load_shard, shard_path
 
 
-def _load_filter(path: str) -> CuckooFilter:
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    cf = _FILTER_CACHE.get(key)
-    if cf is None:
-        with open(path, "rb") as f:
-            cf = CuckooFilter.from_bytes(f.read())
-        _FILTER_CACHE[key] = cf
-        while len(_FILTER_CACHE) > _FILTER_CACHE_MAX:
-            _FILTER_CACHE.popitem(last=False)
-    else:
-        _FILTER_CACHE.move_to_end(key)
-    return cf
+def _read_filter(path: str) -> CuckooFilter:
+    with open(path, "rb") as f:
+        return CuckooFilter.from_bytes(f.read())
 
 
 class ShardedCuckoo(ShardedSeenStore):
@@ -102,10 +88,7 @@ class ShardedCuckoo(ShardedSeenStore):
                     {"shard": "int32", "n": "int64", "kicks": "int64"}
                 )
             if cur is not None:
-                path = os.path.join(directory, f"shard={shard:05d}",
-                                    f"v={cur:06d}.bin")
-                with open(path, "rb") as f:
-                    cf = CuckooFilter.from_bytes(f.read())
+                cf = _read_filter(shard_path(directory, shard, cur))
             else:
                 cf = CuckooFilter.for_capacity(cap)
             if op == "add":
@@ -125,7 +108,7 @@ class ShardedCuckoo(ShardedSeenStore):
             # parity, aggregated driver-side)
             kicks = int(cf.n_kicks)
             cf.n_kicks = 0  # the cached filter object must not double-count
-            out = os.path.join(directory, f"shard={shard:05d}", f"v={wv:06d}.bin")
+            out = shard_path(directory, shard, wv)
             os.makedirs(os.path.dirname(out), exist_ok=True)
             tmp = out + f".tmp{os.getpid()}"
             with open(tmp, "wb") as f:
@@ -177,18 +160,11 @@ class ShardedCuckoo(ShardedSeenStore):
                 v = versions.get(int(shard))
                 if v is None:
                     continue  # empty shard: provably never inserted
-                path = os.path.join(directory, f"shard={int(shard):05d}",
-                                    f"v={v:06d}.bin")
-                cf = _load_filter(path)
+                cf = load_shard(shard_path(directory, int(shard), v),
+                                _read_filter)
                 mask = shards == shard
                 out[mask] = cf.might_contain(h[mask])
             return pd.Series(out, index=hashes.index)
 
         return probe
-
-    # ------------------------------------------------------------- rebuild
-    def rebuild_from(self, frontier) -> int:
-        self.versions = {}
-        self.n_added = 0
-        return self.add_dataframe(frontier.select("url_hash"), "url_hash")
-    # prune() inherited from ShardedSeenStore
+    # rebuild_from() and prune() inherited from ShardedSeenStore

@@ -16,12 +16,40 @@ cannot drift:
   manifest write can never orphan a referenced version.
 
 Subclasses own the filter-specific parts only: file payload
-(de)serialization, the per-shard mutate ops, and the probe UDF.
+(de)serialization, the per-shard mutate ops, and the probe UDF.  The
+worker-side shard cache (``load_shard``) and the frontier rebuild are
+shared here too.
 """
 
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+
+# per-worker cache of decoded shard files, keyed on (path, mtime_ns, size):
+# versions are never rewritten (monotonic write counter), and the stat key
+# makes even an out-of-protocol rewrite impossible to serve stale
+_SHARD_CACHE: OrderedDict[tuple, object] = OrderedDict()
+_SHARD_CACHE_MAX = 64
+
+
+def shard_path(directory: str, shard: int, version: int) -> str:
+    return os.path.join(directory, f"shard={shard:05d}", f"v={version:06d}.bin")
+
+
+def load_shard(path: str, decode):
+    """The decoded shard file at ``path`` through the per-worker LRU;
+    ``decode(path)`` runs only on a miss."""
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    val = _SHARD_CACHE.get(key)
+    if val is None:
+        val = _SHARD_CACHE[key] = decode(path)
+        while len(_SHARD_CACHE) > _SHARD_CACHE_MAX:
+            _SHARD_CACHE.popitem(last=False)
+    else:
+        _SHARD_CACHE.move_to_end(key)
+    return val
 
 
 class ShardedSeenStore:
@@ -45,9 +73,6 @@ class ShardedSeenStore:
                     if f.startswith("v=") and f.endswith(".bin"):
                         mx = max(mx, int(f[2:-4]))
         return mx
-
-    def _path(self, shard: int, version: int) -> str:
-        return os.path.join(self.dir, f"shard={shard:05d}", f"v={version:06d}.bin")
 
     # ------------------------------------------------------------- metadata
     def _manifest_common(self) -> dict:
@@ -87,3 +112,14 @@ class ShardedSeenStore:
                     v = int(f[2:-4])
                     if v not in keep:
                         os.unlink(os.path.join(sd, f))
+
+    # ------------------------------------------------------------- rebuild
+    def rebuild_from(self, frontier) -> int:
+        """Coherence repair: reconstruct the whole set from a frontier
+        url_hash scan (restore-without-filter-state, or external appends
+        that bypassed the round loop).  The rebuild gets its own write-
+        counter version, so a subsequent same-round add can never overwrite
+        it."""
+        self.versions = {}
+        self.n_added = 0
+        return self.add_dataframe(frontier.select("url_hash"), "url_hash")

@@ -937,8 +937,7 @@ def o20_metrics_table(spark, sf_dir):
     # no checkpoint_dir → work_dir is a fresh mkdtemp; the metrics table is
     # written there per round and read back lazily (files persist)
     crawler = SparkCrawler(
-        spark, sdfs["corpus"], sdfs["robots"], collect_metrics=True,
-        use_bloom=False,
+        spark, sdfs["corpus"], sdfs["robots"], use_bloom=False,
     )
     crawler.run(seeds=sdfs["seeds"])
     return crawler.metrics_table().select("round", "stage", "passed", "rejected")

@@ -79,7 +79,7 @@ def run_crawl_laps_detailed(cpus: int) -> dict:
         seeds = spark.read.parquet(paths["seeds"])
         crawler = SparkCrawler(
             spark, corpus, robots, bench.BENCH_CFG,
-            collect_metrics=False, use_bloom=True,
+            use_bloom=True,
             seen_filter="bloom", bloom_capacity=1 << 22, n_salts=0,
             validate_payloads=True,
         )

@@ -70,7 +70,7 @@ def run_config(spark, rows: int, buckets: int | None, delta_rows: int) -> dict:
     empty = spark.createDataFrame([], FRONTIER_SCHEMA)
     c = SparkCrawler(
         spark, empty, spark.createDataFrame([], "scheme_and_authority string"),
-        collect_metrics=False, use_bloom=False, checkpoint_dir=work,
+        use_bloom=False, checkpoint_dir=work,
         frontier_buckets=buckets,
     )
     if buckets is None:

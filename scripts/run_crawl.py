@@ -74,7 +74,6 @@ def main():
         frontier_buckets=args.frontier_buckets,
         n_salts=args.n_salts,
         validate_payloads=args.validate_payloads,
-        collect_metrics=False,
     )
     seeds = spark.read.parquet(args.seeds) if args.seeds else None
     t0 = time.time()

@@ -154,7 +154,7 @@ def test_crawl_with_cuckoo_matches_oracle(spark):
     sdfs = corpus_to_spark(spark, tables)
     crawler = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
-        use_bloom=True, seen_filter="cuckoo", collect_metrics=False,
+        use_bloom=True, seen_filter="cuckoo",
     )
     res = crawler.run(seeds=sdfs["seeds"])
     assert_crawl_equal(res, oracle)
@@ -176,7 +176,7 @@ def test_cuckoo_resume_restores_kind(spark, tmp_path):
     a = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
         checkpoint_dir=ckpt, checkpoint_interval=2,
-        seen_filter="cuckoo", collect_metrics=False,
+        seen_filter="cuckoo",
     )
     a.run(seeds=sdfs["seeds"], stop_after_round=3)
     assert 0 < a.rnd
@@ -185,7 +185,7 @@ def test_cuckoo_resume_restores_kind(spark, tmp_path):
     # resume with the DEFAULT seen_filter arg: the manifest must win
     b = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
-        checkpoint_dir=ckpt, checkpoint_interval=2, collect_metrics=False,
+        checkpoint_dir=ckpt, checkpoint_interval=2,
     )
     res = b.run(resume=True)
     assert isinstance(b.bloom, ShardedCuckoo)

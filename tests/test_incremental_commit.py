@@ -56,7 +56,7 @@ def test_update_heavy_round_writes_o_delta_not_o_frontier(spark, tmp_path):
     crawler = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
         checkpoint_dir=ckpt, checkpoint_interval=5,
-        collect_metrics=False, frontier_buckets=16,
+        frontier_buckets=16,
     )
     res = crawler.run(seeds=sdfs["seeds"])
     oracle = crawl_oracle(tables["corpus"], tables["robots"], tables["seeds"], cfg)
@@ -117,7 +117,7 @@ def test_tail_rounds_write_small_deltas(spark, tmp_path):
     crawler = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CrawlConfig(),
         checkpoint_dir=ckpt, checkpoint_interval=5,
-        collect_metrics=False, frontier_buckets=64,
+        frontier_buckets=64,
     )
     res = crawler.run(seeds=sdfs["seeds"])
     oracle = crawl_oracle(tables["corpus"], tables["robots"], tables["seeds"])
@@ -163,7 +163,7 @@ def test_compaction_preserves_exactness_and_resume(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     a = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
-        checkpoint_dir=ckpt, checkpoint_interval=2, collect_metrics=False,
+        checkpoint_dir=ckpt, checkpoint_interval=2,
     )
     a.compact_after = 2
     a.run(seeds=sdfs["seeds"], stop_after_round=4)
@@ -173,7 +173,7 @@ def test_compaction_preserves_exactness_and_resume(spark, tmp_path):
 
     b = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
-        checkpoint_dir=ckpt, checkpoint_interval=2, collect_metrics=False,
+        checkpoint_dir=ckpt, checkpoint_interval=2,
     )
     b.compact_after = 2
     res = b.run(resume=True)
@@ -181,7 +181,7 @@ def test_compaction_preserves_exactness_and_resume(spark, tmp_path):
 
     # and equal to an uninterrupted, never-compacting run
     c = SparkCrawler(
-        spark, sdfs["corpus"], sdfs["robots"], cfg, collect_metrics=False,
+        spark, sdfs["corpus"], sdfs["robots"], cfg,
     )
     res_c = c.run(seeds=sdfs["seeds"])
     fa = res.frontier_pdf()[ORACLE_COLS].reset_index(drop=True)
@@ -230,7 +230,7 @@ def test_upd_overflow_triggers_compaction(spark, tmp_path):
     sdfs = corpus_to_spark(spark, tables)
     crawler = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
-        collect_metrics=False, frontier_buckets=16,
+        frontier_buckets=16,
         seen_broadcast_limit=100,
     )
     crawler.compact_after = 99  # chain-length trigger disabled
@@ -282,7 +282,7 @@ def test_selective_compaction_rewrites_subset(spark, tmp_path):
         c = SparkCrawler(
             spark, sdfs["corpus"], sdfs["robots"], cfg,
             checkpoint_dir=ckpt, checkpoint_interval=2,
-            collect_metrics=False, frontier_buckets=16,
+            frontier_buckets=16,
             prioritizer=hot_first,
         )
         return c

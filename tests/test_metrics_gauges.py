@@ -29,7 +29,7 @@ def test_bloom_cache_stage_and_gauges(spark):
     sdfs = corpus_to_spark(spark, tables)
     crawler = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], cfg,
-        collect_metrics=True, use_bloom=True, bloom_capacity=1 << 14,
+        use_bloom=True, bloom_capacity=1 << 14,
     )
     res = crawler.run(seeds=sdfs["seeds"])
 

@@ -184,7 +184,7 @@ def test_mor_reconcile_keeps_frontier_scan_shaped(spark, fixture_dfs):
     anti-join here would shuffle the whole frontier every read."""
     crawler = SparkCrawler(
         spark, fixture_dfs["corpus"], fixture_dfs["robots"],
-        use_bloom=False, collect_metrics=False,
+        use_bloom=False,
     )
     crawler.seed(fixture_dfs["seeds"])
     crawler._step()

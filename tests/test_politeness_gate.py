@@ -157,7 +157,7 @@ def test_byte_budget_crawl_matches_oracle(spark):
     tables = gen_corpus(spec)
     sdfs = corpus_to_spark(spark, tables)
     crawler = SparkCrawler(
-        spark, sdfs["corpus"], sdfs["robots"], cfg, collect_metrics=False,
+        spark, sdfs["corpus"], sdfs["robots"], cfg,
     )
     res = crawler.run(seeds=sdfs["seeds"])
     oracle = crawl_oracle(tables["corpus"], tables["robots"], tables["seeds"], cfg)

@@ -16,8 +16,8 @@ from abwcf_spark.testing.spark_fixtures import corpus_to_spark
 def test_purge_requires_cuckoo(spark, tmp_path):
     tables = gen_corpus(T1_MICRO)
     sdfs = corpus_to_spark(spark, tables)
-    c = SparkCrawler(spark, sdfs["corpus"], sdfs["robots"], CrawlConfig(),
-                     collect_metrics=False)  # default = bloom
+    c = SparkCrawler(spark, sdfs["corpus"], sdfs["robots"],
+                     CrawlConfig())  # default = bloom
     with pytest.raises(ValueError, match="cuckoo"):
         c.purge_urls(["https://h0.example/p/0"])
 

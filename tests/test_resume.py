@@ -114,7 +114,6 @@ def test_metrics_table_survives_resume_and_matches_oracle(spark, tmp_path):
     a = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CFG,
         checkpoint_dir=str(tmp_path / "a"), checkpoint_interval=2,
-        collect_metrics=True,
     )
     a.run(seeds=sdfs["seeds"])
     ta = (
@@ -125,13 +124,13 @@ def test_metrics_table_survives_resume_and_matches_oracle(spark, tmp_path):
     ckpt_b = str(tmp_path / "b")
     b1 = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CFG,
-        checkpoint_dir=ckpt_b, checkpoint_interval=2, collect_metrics=True,
+        checkpoint_dir=ckpt_b, checkpoint_interval=2,
     )
     b1.run(seeds=sdfs["seeds"], stop_after_round=3)
     del b1
     b2 = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CFG,
-        checkpoint_dir=ckpt_b, checkpoint_interval=2, collect_metrics=True,
+        checkpoint_dir=ckpt_b, checkpoint_interval=2,
     )
     b2.run(resume=True)
     tb = (

@@ -84,7 +84,6 @@ def test_streaming_rounds_match_oracle(spark, tmp_path):
     crawler = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CrawlConfig(),
         checkpoint_dir=str(tmp_path / "ck"), checkpoint_interval=3,
-        collect_metrics=False,
     )
     res = stream_rounds(
         crawler, seeds=sdfs["seeds"],
@@ -111,7 +110,7 @@ def test_streaming_rounds_restart_resumes_from_manifest(spark, tmp_path):
 
     c1 = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CrawlConfig(),
-        checkpoint_dir=ck, checkpoint_interval=1, collect_metrics=False,
+        checkpoint_dir=ck, checkpoint_interval=1,
     )
     stream_rounds(
         c1, seeds=sdfs["seeds"],
@@ -124,7 +123,7 @@ def test_streaming_rounds_restart_resumes_from_manifest(spark, tmp_path):
     # the manifest must win (no re-seeding)
     c2 = SparkCrawler(
         spark, sdfs["corpus"], sdfs["robots"], CrawlConfig(),
-        checkpoint_dir=ck, checkpoint_interval=1, collect_metrics=False,
+        checkpoint_dir=ck, checkpoint_interval=1,
     )
     res = stream_rounds(
         c2, seeds=sdfs["seeds"], checkpoint_dir=str(tmp_path / "s2"),
